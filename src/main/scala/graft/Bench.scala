@@ -298,11 +298,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] WARN failed to write bench_floor_next.json: ${e.getMessage}")
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+    import SparkEntry.{jsonString => jstr}
     // Keep the stdout line SMALL — and this time provably so. The driver
     // tail-captures only the LAST 2,000 characters of output, and a
     // per-query map over ~200 queries is ~8 KB however tersely printed

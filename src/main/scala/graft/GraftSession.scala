@@ -4,16 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE place the production session config lives.
   *
-  * Every graft entry point (Bench, Verify, ExplainDump) builds its
+  * Every graft entry point (Bench, Verify, and the tool mains
+  * ExplainDump, ExplainOne, TimeOne, LshCandidates) builds its
   * session through `builder(...)` so the scale-critical settings cannot
   * drift apart between them — the r13 sf100 sweep found exactly that
   * class of bug the hard way: Spark's 128-key ObjectHashAggregate
   * sort-based fallback silently sorted an 8e9-row typed-aggregate input
   * to disk because only some builders carried the raised threshold.
   * SessionContractSpec asserts both that the configs below land on a
-  * session built here and that the three mains reference this builder,
-  * so a refactor that drops either fails `sbt test`, not the next
-  * hundred-terabyte run.
+  * session built here and that every main under src/main references
+  * this builder, so a refactor that drops either fails `sbt test`, not
+  * the next hundred-terabyte run.
   */
 object GraftSession {
 

@@ -20,4 +20,18 @@ object SparkEntry {
     * like the zip fixture builder and the test-semantics pager). */
   def benchQueries: Seq[String] =
     Queries.registry.filter(_.bench).map(_.key)
+
+  /** `s` as a quoted JSON string for the Bench and Verify records:
+    * escapes quote, backslash and ALL control chars (< 0x20) — a tab or
+    * CR in builder-authored SQL would otherwise make the driver's
+    * json.load fail and silently zero the round's correctness. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -25,6 +25,16 @@ package graft.operators
   */
 object FixedPoint {
 
+  /** Sign-split integer division: ⌊|num| / den⌋ with num's sign
+    * re-applied (trunc(num/den)) — identical under Spark's truncating
+    * `div` and DuckDB's flooring `//`. Assumes a POSITIVE denominator. */
+  def sdiv(num: String, den: String, duck: Boolean): String = {
+    val d = if (duck) "//" else "div"
+    s"""(CASE WHEN ($num) >= 0 THEN ($num) $d ($den)
+       | ELSE -((-($num)) $d ($den)) END)"""
+      .stripMargin.replace("\n", " ")
+  }
+
   /** Sign-split ppm division: ⌊|num|·10⁶ / den⌋ with num's sign
     * re-applied — identical under Spark's truncating `div` and
     * DuckDB's flooring `//`. Assumes a POSITIVE denominator — use

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Paginated ingestion.
@@ -19,41 +19,6 @@ object PagedReader {
     * charge of the combined plan. */
   def readPages(pages: Seq[DataFrame]): DataFrame =
     pages.reduce(_ unionAll _)
-
-  /** Distributed fetch: one task per page, `fetch` runs on executors.
-    * This is the shape for a real paged HTTP/JDBC source: the fetch
-    * closure must be serializable and self-contained. */
-  def readPagesDistributed[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, numPages: Int, fetch: Int => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
-    import spark.implicits._
-    spark.range(numPages).as[Long]
-      .repartition(math.min(numPages, 256))
-      .flatMap(p => fetch(p.toInt))
-  }
-
-  /** Bounded poll-until-ready for an executor-side fetch: the reference
-    * polls its export endpoint until `state == 3`, sleeping between
-    * attempts with a hard retry cap (feeder.py:103-115). `attempt`
-    * receives the 0-based attempt index and returns Some(result) when
-    * the remote work is ready, None to keep waiting; exceptions
-    * propagate immediately (a failed request is not "not ready yet").
-    * Fails loudly after `maxAttempts`. Self-contained and serializable —
-    * compose it INSIDE a `readPagesDistributed` fetch closure so each
-    * page task carries its own bounded wait. */
-  def pollUntilReady[T](maxAttempts: Int, delayMs: Long)(attempt: Int => Option[T]): T = {
-    require(maxAttempts > 0, "maxAttempts must be positive")
-    var i = 0
-    while (i < maxAttempts) {
-      attempt(i) match {
-        case Some(t) => return t
-        case None =>
-          i += 1
-          if (i < maxAttempts && delayMs > 0) Thread.sleep(delayMs)
-      }
-    }
-    throw new IllegalStateException(
-      s"pollUntilReady: resource not ready after $maxAttempts attempts")
-  }
 
   /** Per-page (lo, hi) key bounds for the first `numPages` pages of
     * `pageSize` rows in `orderCol` order. ONE distributed top-(P·S) pass

@@ -324,9 +324,6 @@ object ZippedTabular {
     rows.result()
   }
 
-  /** Decode an XLSX payload (itself a zip of XML) into (header, rows):
-    * first worksheet, first row as header — the reference's
-    * `pd.read_excel` shape (feeder.py:118-122). */
   /** Ordering key for worksheet entries: sheet number when the name is
     * the conventional sheetN.xml (so sheet2 < sheet10), then the name —
     * zip entry order is arbitrary, so the "first sheet" must not depend
@@ -444,12 +441,12 @@ object ZippedTabular {
     (shared, sheet, dateStyles)
   }
 
+  /** Decode an XLSX payload (itself a zip of XML) into (header, rows):
+    * first worksheet, first row as header — the reference's
+    * `pd.read_excel` shape (feeder.py:118-122). */
   def decodeXlsx(bytes: Array[Byte]): (Array[String], Iterator[Array[String]]) = {
-    val (shared, sheet, dateStyles) = workbookParts(bytes)
-    val rows = parseSheetCells(sheet, shared, dateStyles)
-      .map(_.map(c => if (c == null) null else c.value))
-    require(rows.nonEmpty, "empty worksheet")
-    (rows.head, rows.iterator.drop(1))
+    val (header, rows) = decodeXlsxCells(bytes)
+    (header, rows.iterator.map(_.map(c => if (c == null) null else c.value)))
   }
 
   /** Typed-cell decode: header (first row, as strings) + data rows with
@@ -617,32 +614,19 @@ object ZippedTabular {
 
   // --- distributed readers --------------------------------------------------
 
-  private def readZipped(spark: SparkSession, path: String, columns: Seq[String],
-                         decode: Array[Byte] => (Array[String], Iterator[Array[String]])): DataFrame = {
-    val schema = StructType(columns.map(StructField(_, StringType, nullable = true)))
-    val bin = spark.read.format("binaryFile").load(path)
-      .select(col("content"))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val n = columns.length
-    bin.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val (_, dataRows) = decode(firstEntry(r.getAs[Array[Byte]](0)))
-        dataRows.map(cells => Row.fromSeq(
-          (0 until n).map(i => if (i < cells.length) cells(i) else null)))
-      }
-    }(enc)
-  }
+  private def stringSchema(columns: Seq[String]): StructType =
+    StructType(columns.map(StructField(_, StringType, nullable = true)))
 
   /** Read every `*.zip` under `path` (each containing one CSV entry) into
     * a single string-typed DataFrame with the given column names.
     * Distributed: one task per archive via the binaryFile source. */
   def readZippedCsv(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
-    readZipped(spark, path, columns, parseCsv)
+    readZippedCsvTyped(spark, path, stringSchema(columns))
 
   /** Same, for zips whose first entry is an XLSX workbook — the
     * reference's actual export shape (feeder.py:118-122). */
   def readZippedXlsx(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
-    readZipped(spark, path, columns, decodeXlsx)
+    readZippedXlsxTyped(spark, path, stringSchema(columns))
 
   // --- typed readers --------------------------------------------------------
 
@@ -654,7 +638,7 @@ object ZippedTabular {
     * behavior, which these readers mirror. */
   private[graft] def convertCell(raw: String, dt: DataType): Any =
     if (raw == null) null
-    else if (raw.trim.isEmpty && dt != StringType) null
+    else if (dt != StringType && raw.trim.isEmpty) null
     else dt match {
       case StringType  => raw
       case LongType    => new java.math.BigDecimal(raw.trim).longValueExact()

@@ -24,61 +24,12 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * HTTP — per PROJECT, not per row — and the data plane is one bounded
   * artifact download; fleet-scale ingest fans out over projects (many
   * lifecycles), then the decode of the downloaded archives is the
-  * distributed part. Transient faults (5xx, connection resets) retry
-  * with exponential backoff like [[HttpPageTransport]]; 4xx — a bad
-  * token (401) or a bad request — fails fast: retrying an auth failure
-  * only hides a config error. */
+  * distributed part. Every request goes through [[HttpExchange]]:
+  * transient faults (5xx, connection resets) retry with exponential
+  * backoff; 4xx — a bad token (401) or a bad request — fails fast. */
 object ExportLifecycle {
 
   private lazy val mapper = new ObjectMapper()
-
-  /** One HTTP exchange returning the response bytes. Bounded retry on
-    * 5xx/connection faults; 4xx throws immediately. */
-  private[v2] def request(url: String, method: String,
-                          headers: Map[String, String], body: Option[String],
-                          retries: Int, backoffMs: Long): Array[Byte] = {
-    var attempt = 0
-    while (true) {
-      val c = new java.net.URL(url).openConnection()
-        .asInstanceOf[java.net.HttpURLConnection]
-      try {
-        c.setRequestMethod(method)
-        c.setConnectTimeout(10000)
-        c.setReadTimeout(60000)
-        headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
-        body.foreach { b =>
-          c.setDoOutput(true)
-          val os = c.getOutputStream
-          try os.write(b.getBytes("UTF-8")) finally os.close()
-        }
-        val code =
-          try c.getResponseCode
-          catch {
-            case e: java.io.IOException =>
-              if (attempt >= retries) throw e
-              -1
-          }
-        if (code == 200) {
-          val in = c.getInputStream
-          try {
-            val out = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](8192)
-            var n = in.read(buf)
-            while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-            return out.toByteArray
-          } finally in.close()
-        }
-        if (code >= 400 && code < 500)
-          throw new java.io.IOException(s"graft-export: HTTP $code for $method $url")
-        if (code >= 0 && attempt >= retries)
-          throw new java.io.IOException(
-            s"graft-export: HTTP $code for $method $url after ${attempt + 1} attempts")
-      } finally c.disconnect()
-      attempt += 1
-      if (backoffMs > 0) Thread.sleep(backoffMs << math.min(attempt - 1, 6))
-    }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** The recruit counter's name in the reference config
     * (feeder.py:46 — `--------РЕКРУТ`) and the bare form the w6 feeder
@@ -119,7 +70,7 @@ object ExportLifecycle {
     val headers = Map("SS-Token" -> token)
     val url = s"$base/projects/$projectId/counters"
     val body = bodyNode(new String(
-      request(url, "GET", headers, None, retries, backoffMs), "UTF-8"), url)
+      HttpExchange.fetch(url, "GET", headers, None, retries, backoffMs), "UTF-8"), url)
     (0 until body.size()).map(i =>
       (body.get(i).get("id").asLong(), body.get(i).get("name").asText()))
   }
@@ -153,7 +104,7 @@ object ExportLifecycle {
          | "archiveSingleXlsxResultFile": true}""".stripMargin
     val createUrl = s"$base/projects/$projectId/results/data"
     val created = new String(
-      request(createUrl, "POST", headers,
+      HttpExchange.fetch(createUrl, "POST", headers,
         Some(createBody), retries, backoffMs), "UTF-8")
     val rid = bodyNode(created, createUrl).asLong()
     var polls = 0
@@ -165,11 +116,11 @@ object ExportLifecycle {
       if (polls > 0 && pollDelayMs > 0) Thread.sleep(pollDelayMs)
       val pollUrl = s"$base/projects/$projectId/results/data/$rid"
       val st = bodyNode(new String(
-        request(pollUrl, "GET",
+        HttpExchange.fetch(pollUrl, "GET",
           headers, None, retries, backoffMs), "UTF-8"), pollUrl)
       if (st.get("state").asInt() == 3) fileUrl = st.get("fileUrl").asText()
       polls += 1
     }
-    request(fileUrl, "GET", Map.empty, None, retries, backoffMs)
+    HttpExchange.fetch(fileUrl, "GET", Map.empty, None, retries, backoffMs)
   }
 }

@@ -166,55 +166,17 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
                                     headers: Map[String, String] = Map.empty)
   extends PageTransport {
 
-  private def connect(url: String, range: Option[String],
-                      method: String): java.net.HttpURLConnection = {
-    var attempt = 0
-    while (true) {
-      val c = new java.net.URL(url).openConnection()
-        .asInstanceOf[java.net.HttpURLConnection]
-      c.setRequestMethod(method)
-      c.setConnectTimeout(10000)
-      c.setReadTimeout(60000)
-      // per-request auth/custom headers (feeder.py:15-16's SS-Token):
-      // every manifest read, zone probe, and page GET carries them
-      headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
-      range.foreach(r => c.setRequestProperty("Range", r))
-      val code =
-        try c.getResponseCode
-        catch {
-          case e: java.io.IOException =>
-            c.disconnect()
-            if (attempt >= retries) throw e
-            -1
-        }
-      if (code == 200 || code == 206) return c
-      if (code >= 400 && code < 500) {
-        c.disconnect()
-        throw new java.io.IOException(s"graft-paged: HTTP $code for $url")
-      }
-      c.disconnect()
-      if (code >= 0 && attempt >= retries)
-        throw new java.io.IOException(
-          s"graft-paged: HTTP $code for $url after ${attempt + 1} attempts")
-      attempt += 1
-      if (backoffMs > 0) Thread.sleep(backoffMs << math.min(attempt - 1, 6))
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  // per-request auth/custom headers (feeder.py:15-16's SS-Token):
+  // every manifest read, zone probe, and page GET carries them
+  private def connect(url: String, range: Option[String]): java.net.HttpURLConnection =
+    HttpExchange.open(url, "GET", headers ++ range.map("Range" -> _), None,
+      retries, backoffMs)
 
-  private def readAll(c: java.net.HttpURLConnection): String = {
-    val in = c.getInputStream
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally { in.close(); c.disconnect() }
-  }
+  private def readAll(c: java.net.HttpURLConnection): String =
+    new String(HttpExchange.readAll(c), "UTF-8")
 
   override def listPages(): Array[PageRef] = {
-    val manifest = readAll(connect(s"$base/_PAGES", None, "GET"))
+    val manifest = readAll(connect(s"$base/_PAGES", None))
     val pages = manifest.linesIterator
       .collectFirst { case l if l.startsWith("pages=") =>
         l.stripPrefix("pages=").trim.toInt }
@@ -225,7 +187,7 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
       // byte size from a 1-byte ranged GET's Content-Range total (one
       // cheap bounded round-trip per page at plan time — the scan does
       // a full GET per page anyway); -1 when the server doesn't say
-      val c = connect(s"$base/$name", Some("bytes=0-0"), "GET")
+      val c = connect(s"$base/$name", Some("bytes=0-0"))
       val len =
         if (c.getResponseCode == 206)
           Option(c.getHeaderField("Content-Range"))
@@ -241,7 +203,7 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
 
   override def open(ref: PageRef): java.io.BufferedReader = {
     if (throttleMs > 0) Thread.sleep(throttleMs) // feeder.py:29-33 politeness
-    val c = connect(ref.loc, None, "GET")
+    val c = connect(ref.loc, None)
     new java.io.BufferedReader(
       new java.io.InputStreamReader(c.getInputStream, "UTF-8")) {
       override def close(): Unit = { super.close(); c.disconnect() }
@@ -249,7 +211,7 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
   }
 
   override def firstLine(ref: PageRef): Option[String] = {
-    val c = connect(ref.loc, Some("bytes=0-8191"), "GET")
+    val c = connect(ref.loc, Some("bytes=0-8191"))
     val partial = c.getResponseCode == 206
     val in = new java.io.BufferedReader(
       new java.io.InputStreamReader(c.getInputStream, "UTF-8"))
@@ -264,7 +226,7 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
   }
 
   override def lastLine(ref: PageRef): Option[String] = {
-    val c = connect(ref.loc, Some("bytes=-8192"), "GET")
+    val c = connect(ref.loc, Some("bytes=-8192"))
     if (c.getResponseCode != 206) {
       // no Range support: the suffix request returned the WHOLE page —
       // reading it to find the last line would defeat the point of a
@@ -280,6 +242,62 @@ private[v2] class HttpPageTransport(base: String, retries: Int,
       lines.lastOption.map(_.stripSuffix("\r"))
     else None
   }
+}
+
+/** The one retrying HTTP exchange of the sources layer, shared by
+  * [[HttpPageTransport]] and [[ExportLifecycle]]: 10 s connect / 60 s
+  * read timeouts; 5xx and connection faults retry up to `retries`
+  * times with exponential backoff (`backoffMs << min(attempt-1, 6)`);
+  * 4xx fails fast — a bad token or a missing page is a contract
+  * violation, not a transient, and retrying it only hides a config
+  * error. */
+private[v2] object HttpExchange {
+
+  /** The connection, once the server answers 200 or 206; the caller
+    * reads and disconnects it. `body` is sent as UTF-8. */
+  def open(url: String, method: String, headers: Map[String, String],
+           body: Option[String], retries: Int,
+           backoffMs: Long): java.net.HttpURLConnection = {
+    var attempt = 0
+    while (true) {
+      val c = new java.net.URL(url).openConnection()
+        .asInstanceOf[java.net.HttpURLConnection]
+      val code =
+        try {
+          c.setRequestMethod(method)
+          c.setConnectTimeout(10000)
+          c.setReadTimeout(60000)
+          headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
+          body.foreach { b =>
+            c.setDoOutput(true)
+            val os = c.getOutputStream
+            try os.write(b.getBytes("UTF-8")) finally os.close()
+          }
+          try c.getResponseCode
+          catch { case _: java.io.IOException if attempt < retries => -1 }
+        } catch { case e: Throwable => c.disconnect(); throw e }
+      if (code == 200 || code == 206) return c
+      c.disconnect()
+      if (code >= 400 && code < 500)
+        throw new java.io.IOException(s"graft: HTTP $code for $method $url")
+      if (code >= 0 && attempt >= retries)
+        throw new java.io.IOException(
+          s"graft: HTTP $code for $method $url after ${attempt + 1} attempts")
+      attempt += 1
+      if (backoffMs > 0) Thread.sleep(backoffMs << math.min(attempt - 1, 6))
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** The whole response body; disconnects `c`. */
+  def readAll(c: java.net.HttpURLConnection): Array[Byte] = {
+    val in = c.getInputStream
+    try in.readAllBytes() finally { in.close(); c.disconnect() }
+  }
+
+  def fetch(url: String, method: String, headers: Map[String, String],
+            body: Option[String], retries: Int, backoffMs: Long): Array[Byte] =
+    readAll(open(url, method, headers, body, retries, backoffMs))
 }
 
 /** Lossless TSV string codec shared by the reader and the sink.

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 import graft.operators.Similarity
 
@@ -16,13 +17,7 @@ object LshCandidates {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val bitsList = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(8, 10, 12)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("16", "16").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))

@@ -33,6 +33,28 @@ class FixedPointSpec extends GraftSuite {
     }
   }
 
+  test("sdiv matches BigInteger truncating division under div and //") {
+    val grid = for {
+      n <- Seq(-1000001L, -999999L, -7L, -1L, 0L, 1L, 7L, 999999L, 1000001L)
+      d <- Seq(1L, 3L, 7L, 1000L, 999983L)
+    } yield (n, d)
+    // DuckDB's `//` floors; evaluate the duck fragment with that
+    // semantics by rewriting each `x // y` into a floorDiv call
+    spark.udf.register("floor_div", (a: Long, b: Long) => Math.floorDiv(a, b))
+    val duck = FixedPoint.sdiv("n", "d", duck = true)
+      .replaceAll("""(\((?:-\(n\)|n)\)) // \(d\)""", "floor_div($1, d)")
+    assert(!duck.contains("//") && "floor_div".r.findAllIn(duck).size == 2, duck)
+    val got = grid.toDF("n", "d")
+      .withColumn("q_div", expr(FixedPoint.sdiv("n", "d", duck = false)))
+      .withColumn("q_duck", expr(duck))
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
+      .toMap
+    grid.foreach { case (n, d) =>
+      val want = (BigInt(n) / BigInt(d)).toLong
+      assert(got((n, d)) == ((want, want)), s"sdiv($n, $d) = ${got((n, d))}, want $want")
+    }
+  }
+
   test("sdivPpm2 matches reference semantics for any operand signs") {
     val grid = for {
       n <- Seq(-1000001L, -7L, -1L, 0L, 1L, 7L, 1000001L)

@@ -17,14 +17,6 @@ class SourcesSpec extends GraftSuite {
     assert(all.count() == 25)
   }
 
-  test("readPagesDistributed runs one fetch per page on executors") {
-    val ds = PagedReader.readPagesDistributed(spark, 5,
-      (p: Int) => Iterator.tabulate(3)(i => p * 100 + i))
-    val got = ds.collect().sorted
-    assert(got.length == 15)
-    assert(got.contains(401) && got.contains(0))
-  }
-
   test("pageBoundsDistributed equals the collected bounds, O(numPages) at the driver") {
     val df = (1 to 103).map(i => (i.toLong, s"row$i")).toDF("k", "v").repartition(7)
     val collected = PagedReader.pageBounds(df, "k", 10, 5)
@@ -39,33 +31,6 @@ class SourcesSpec extends GraftSuite {
     val dup = ((1 to 20) :+ 10).map(i => (i.toLong, "x")).toDF("k", "v")
     intercept[IllegalArgumentException] { PagedReader.pageBounds(dup, "k", 5, 5) }
     intercept[IllegalArgumentException] { PagedReader.pageBoundsDistributed(dup, "k", 5, 5) }
-  }
-
-  test("pollUntilReady models the reference's bounded export poll") {
-    // ready on the third attempt → the value lands and 3 attempts ran
-    var attempts = 0
-    val got = PagedReader.pollUntilReady(maxAttempts = 5, delayMs = 0) { i =>
-      attempts += 1
-      if (i >= 2) Some(s"export-$i") else None
-    }
-    assert(got == "export-2" && attempts == 3)
-    // never ready → loud failure after exactly maxAttempts
-    var n = 0
-    intercept[IllegalStateException] {
-      PagedReader.pollUntilReady[String](maxAttempts = 4, delayMs = 0) { _ => n += 1; None }
-    }
-    assert(n == 4)
-  }
-
-  test("executor-side fetch with a poll wrapper: one bounded wait per page task") {
-    // the fetch closure is self-contained and serializable: each page
-    // task polls its own export until "state 3" (ready on attempt >= 1)
-    val ds = PagedReader.readPagesDistributed(spark, 6, (p: Int) =>
-      PagedReader.pollUntilReady(maxAttempts = 3, delayMs = 0) { i =>
-        if (i >= 1) Some(Iterator.tabulate(2)(r => p * 10 + r)) else None
-      })
-    val got = ds.collect().sorted
-    assert(got.toSeq == (0 until 6).flatMap(p => Seq(p * 10, p * 10 + 1)))
   }
 
   test("zip roundtrip: archives on disk → distributed CSV decode") {
